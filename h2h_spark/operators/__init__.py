@@ -3,8 +3,35 @@ dedup, similarity search, text analysis, multimodal binary columns."""
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def cache_scope() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Own an operator's internal caches: ``with cache_scope() as keep:``
+    yields ``keep(df) -> df.persist()`` and unpersists everything kept
+    when the block exits — on return, ``break`` and every ``raise``.
+
+    A result built on a kept table must be materialized inside the block
+    (eager ``localCheckpoint``, or checkpoints an action already ran):
+    the release comes before the caller's first action.  A cache the
+    CALLER owns (a returned index table) is persisted directly.
+    """
+    kept: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        kept.append(df.persist())
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in kept:
+            df.unpersist()
 
 
 def scale_out(

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from h2h_spark.operators import cache_scope
+
 
 def pack_sequences(
     df: DataFrame,
@@ -39,9 +41,11 @@ def pack_sequences(
     starting token position inside its bin.
 
     ``_materialize=False`` is a plan-inspection hook (tests): it skips
-    the cumsum persist and the final eager localCheckpoint so the full
-    lineage stays visible in ``explain``; values are identical, the
-    offsets pass just recomputes the prefix sums."""
+    the cumsum cache and the final eager localCheckpoint so the full
+    lineage stays visible in ``explain``.  The offsets pass then
+    recomputes the prefix sums, so it is UNSAFE on nondeterministic
+    input (``rand()``, an unordered ``limit``): the recomputation can
+    disagree with the collected totals and emit wrong bins."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism
@@ -51,36 +55,34 @@ def pack_sequences(
         .withColumn("__p", F.spark_partition_id())
     )
     w = Window.partitionBy("__p").orderBy("id")
-    local = ranged.withColumn("__cum", F.sum("n_tokens").over(w))
-    if _materialize:
-        local = local.persist()
-    totals = sorted(
-        local.groupBy("__p").agg(F.max("__cum").alias("t")).collect(),
-        key=lambda r: r["__p"],
-    )
-    offsets, acc = [], 0
-    for r in totals:
-        offsets.append((r["__p"], acc))
-        acc += r["t"]
-    off_df = spark.createDataFrame(offsets, "__p int, __off long")
-    before = F.col("__off") + F.col("__cum") - F.col("n_tokens")
-    out = (
-        local.join(F.broadcast(off_df), "__p")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("n_tokens"),
-            F.floor(before / budget).cast("bigint").alias("bin"),
-            (before - F.floor(before / budget) * budget).cast("bigint").alias(
-                "bin_offset"
-            ),
+    with cache_scope() as keep:
+        local = ranged.withColumn("__cum", F.sum("n_tokens").over(w))
+        if _materialize:
+            local = keep(local)
+        totals = sorted(
+            local.groupBy("__p").agg(F.max("__cum").alias("t")).collect(),
+            key=lambda r: r["__p"],
         )
-    )
-    if _materialize:
-        # materialize (same row count as the cache it replaces), then
-        # release the cumsum cache instead of leaking it (round 14; §5)
-        out = out.localCheckpoint(eager=True)
-        local.unpersist()
-    return out
+        offsets, acc = [], 0
+        for r in totals:
+            offsets.append((r["__p"], acc))
+            acc += r["t"]
+        off_df = spark.createDataFrame(offsets, "__p int, __off long")
+        before = F.col("__off") + F.col("__cum") - F.col("n_tokens")
+        out = (
+            local.join(F.broadcast(off_df), "__p")
+            .select(
+                F.col("id").alias(id_col),
+                F.col("n_tokens"),
+                F.floor(before / budget).cast("bigint").alias("bin"),
+                (before - F.floor(before / budget) * budget).cast("bigint").alias(
+                    "bin_offset"
+                ),
+            )
+        )
+        if _materialize:
+            out = out.localCheckpoint(eager=True)
+        return out
 
 
 def length_bucketed_batches(

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from h2h_spark.operators import cache_scope
+
 
 def _dot_with_literal(vec_col: Column, q: Sequence[float]) -> Column:
     lit = F.array(*[F.lit(float(x)) for x in q])
@@ -474,43 +476,38 @@ def embedding_near_duplicates(
 
     dim = len(df.select(vec_col).head()[0])
     planes = hyperplanes(dim, nbits * bands, seed)
-    vecs = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("__v")
-    ).persist()
-    entries = band_signatures(vecs, "id", "__v", planes, nbits, bands)
-    # Few-bit bands mean uniformly mid-sized buckets: raise the in-array
-    # expansion cap so every bucket stays on the join-free path.
-    cand = _bucket_candidates(
-        entries, ["band", "bucket"], "id", max_bucket, expand_max=2048
-    )
-    if probe_max_id is not None:
-        cand = cand.filter(F.col("id_a") < probe_max_id)
-        out = _verify_pairs_probe_blocked(
-            cand, vecs, probe_max_id, threshold, round_digits
-        ).localCheckpoint(eager=True)  # pair list; release vecs (§5, r14)
-        vecs.unpersist()
-        return out
-    b = vecs.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"))
-    a = vecs.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"))
-    na = _norm(F.col("__va"))
-    nb = _norm(F.col("__vb"))
-    dot = F.aggregate(
-        F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    score = F.round(dot / (na * nb), round_digits)
-    out = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", score.alias("score"))
-        .filter(F.col("score") >= threshold)
-        # materialize the (tiny) verified pair list, then release the
-        # vector cache instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    vecs.unpersist()
-    return out
+    with cache_scope() as keep:
+        vecs = keep(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
+        )
+        entries = band_signatures(vecs, "id", "__v", planes, nbits, bands)
+        # Few-bit bands mean uniformly mid-sized buckets: raise the in-array
+        # expansion cap so every bucket stays on the join-free path.
+        cand = _bucket_candidates(
+            entries, ["band", "bucket"], "id", max_bucket, expand_max=2048
+        )
+        if probe_max_id is not None:
+            cand = cand.filter(F.col("id_a") < probe_max_id)
+            return _verify_pairs_probe_blocked(
+                cand, vecs, probe_max_id, threshold, round_digits
+            ).localCheckpoint(eager=True)
+        b = vecs.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"))
+        a = vecs.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"))
+        na = _norm(F.col("__va"))
+        nb = _norm(F.col("__vb"))
+        dot = F.aggregate(
+            F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        score = F.round(dot / (na * nb), round_digits)
+        return (
+            cand.join(a, "id_a")
+            .join(b, "id_b")
+            .select("id_a", "id_b", score.alias("score"))
+            .filter(F.col("score") >= threshold)
+            .localCheckpoint(eager=True)
+        )
 
 
 def band_signatures(
@@ -837,54 +834,50 @@ def semantic_dedup(
         lambda acc, x: acc + x,
     )
     sim = F.round(dot / (F.col("__n") * _norm(F.col("__cvec"))), round_digits)
-    assign = (
-        vecs.crossJoin(cents)
-        .select(
-            "id", "__v", "__n",
-            F.struct((-sim).alias("ns"), F.col("cidx")).alias("__s"),
+    with cache_scope() as keep:
+        assign = keep(
+            vecs.crossJoin(cents)
+            .select(
+                "id", "__v", "__n",
+                F.struct((-sim).alias("ns"), F.col("cidx")).alias("__s"),
+            )
+            .groupBy("id")
+            .agg(
+                F.min("__s").getField("cidx").alias("cluster"),
+                F.first("__v").alias("__v"),
+                F.first("__n").alias("__n"),
+            )
+            # three consumers below (both self-join sides + the final keep
+            # join): cache so the scan × centroids argmax runs once, not
+            # three times.
         )
-        .groupBy("id")
-        .agg(
-            F.min("__s").getField("cidx").alias("cluster"),
-            F.first("__v").alias("__v"),
-            F.first("__n").alias("__n"),
+        a = assign.select(
+            F.col("id").alias("id_a"), F.col("cluster").alias("__ca"),
+            F.col("__v").alias("__va"), F.col("__n").alias("__na"),
         )
-        # three consumers below (both self-join sides + the final keep
-        # join): persist so the scan × centroids argmax runs once, not
-        # three times.
-        .persist()
-    )
-    a = assign.select(
-        F.col("id").alias("id_a"), F.col("cluster").alias("__ca"),
-        F.col("__v").alias("__va"), F.col("__n").alias("__na"),
-    )
-    b = assign.select(
-        F.col("id").alias("id_b"), F.col("cluster").alias("__cb"),
-        F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
-    )
-    pdot = F.aggregate(
-        F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pscore = F.round(pdot / (F.col("__na") * F.col("__nb")), round_digits)
-    dropped = (
-        a.join(b, (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")))
-        .filter(pscore >= threshold)
-        .select(F.col("id_b").alias("id"))
-        .distinct()
-        .withColumn("__dropped", F.lit(True))
-    )
-    out = (
-        assign.join(dropped, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            "cluster",
-            F.coalesce(~F.col("__dropped"), F.lit(True)).alias("keep"),
+        b = assign.select(
+            F.col("id").alias("id_b"), F.col("cluster").alias("__cb"),
+            F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
         )
-        # materialize the per-id verdicts (narrow), then release the
-        # assignment cache instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    assign.unpersist()
-    return out
+        pdot = F.aggregate(
+            F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        pscore = F.round(pdot / (F.col("__na") * F.col("__nb")), round_digits)
+        dropped = (
+            a.join(b, (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")))
+            .filter(pscore >= threshold)
+            .select(F.col("id_b").alias("id"))
+            .distinct()
+            .withColumn("__dropped", F.lit(True))
+        )
+        return (
+            assign.join(dropped, "id", "left")
+            .select(
+                F.col("id").alias(id_col),
+                "cluster",
+                F.coalesce(~F.col("__dropped"), F.lit(True)).alias("keep"),
+            )
+            .localCheckpoint(eager=True)
+        )

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
+
 
 def _cell(c: Column, eps: float) -> Column:
     return F.floor(c / F.lit(float(eps))).cast("long")
@@ -175,51 +177,45 @@ def dbscan_2d(
 
     pairs = grid_self_join(pts, id_col, x_col, y_col, eps)
     # the symmetrized neighbor list feeds THREE consumers (degree
-    # aggregate, core-core edge build, border attach); unpersisted, each
-    # re-runs the 9x-replicated grid join — persist once, release after
-    # the labeled result materializes (§2.2/§5, round 14)
-    sym = (
-        pairs.select(F.col("a_id").alias("id"), F.col("b_id").alias("nb"))
-        .unionByName(
-            pairs.select(F.col("b_id").alias("id"), F.col("a_id").alias("nb"))
+    # aggregate, core-core edge build, border attach); uncached, each
+    # re-runs the 9x-replicated grid join — cache it once (§2.2)
+    with cache_scope() as keep:
+        sym = keep(
+            pairs.select(F.col("a_id").alias("id"), F.col("b_id").alias("nb"))
+            .unionByName(
+                pairs.select(F.col("b_id").alias("id"), F.col("a_id").alias("nb"))
+            )
         )
-        .persist()
-    )
-    deg = sym.groupBy("id").agg(F.count("*").alias("n_nb"))
-    # core ids are consumed 4x (two core-edge joins, core labeling, the
-    # border anti-join); tiny (<= |pts| ids), so cache the filtered set
-    core = deg.filter(F.col("n_nb") + 1 >= min_pts).select("id").persist()
-    core_edges = (
-        sym.join(core.withColumnRenamed("id", "nb"), "nb")
-        .join(core, "id")
-        .select(F.col("id").alias("id_a"), F.col("nb").alias("id_b"))
-    )
-    comp = connected_components_star(core_edges)  # (id, rep); no singletons
-    core_lab = core.join(comp, "id", "left").select(
-        "id", F.coalesce(F.col("rep"), F.col("id")).alias("cluster")
-    )
-    # border: non-core with >= 1 core neighbor -> min neighbor cluster
-    border = (
-        sym.join(core_lab.withColumnRenamed("id", "nb"), "nb")
-        .join(core, "id", "left_anti")
-        .groupBy("id")
-        .agg(F.min("cluster").alias("cluster"))
-    )
-    labeled = core_lab.withColumn("role", F.lit("core")).unionByName(
-        border.withColumn("role", F.lit("border"))
-    )
-    out = (
-        pts.select(F.col(id_col).alias("id"))
-        .join(labeled, "id", "left")
-        .select(
-            "id",
-            "cluster",
-            F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
+        deg = sym.groupBy("id").agg(F.count("*").alias("n_nb"))
+        # core ids are consumed 4x (two core-edge joins, core labeling, the
+        # border anti-join); tiny (<= |pts| ids), so cache the filtered set
+        core = keep(deg.filter(F.col("n_nb") + 1 >= min_pts).select("id"))
+        core_edges = (
+            sym.join(core.withColumnRenamed("id", "nb"), "nb")
+            .join(core, "id")
+            .select(F.col("id").alias("id_a"), F.col("nb").alias("id_b"))
         )
-        # materialize (|pts| rows), then release the two caches instead
-        # of leaking them into the session (§5)
-        .localCheckpoint(eager=True)
-    )
-    sym.unpersist()
-    core.unpersist()
-    return out
+        comp = connected_components_star(core_edges)  # (id, rep); no singletons
+        core_lab = core.join(comp, "id", "left").select(
+            "id", F.coalesce(F.col("rep"), F.col("id")).alias("cluster")
+        )
+        # border: non-core with >= 1 core neighbor -> min neighbor cluster
+        border = (
+            sym.join(core_lab.withColumnRenamed("id", "nb"), "nb")
+            .join(core, "id", "left_anti")
+            .groupBy("id")
+            .agg(F.min("cluster").alias("cluster"))
+        )
+        labeled = core_lab.withColumn("role", F.lit("core")).unionByName(
+            border.withColumn("role", F.lit("border"))
+        )
+        return (
+            pts.select(F.col(id_col).alias("id"))
+            .join(labeled, "id", "left")
+            .select(
+                "id",
+                "cluster",
+                F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
+            )
+            .localCheckpoint(eager=True)
+        )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
 from h2h_spark.operators.dedup import tokens
 
 # Small per-language marker lexicons for the n-gram/stopword language-ID
@@ -101,21 +102,20 @@ def decontaminate(
     of training text is one filter-after-projection with NO shuffle of the
     corpus — the groupBy aggregates only the matching (doc, shingle) pairs.
     """
-    from h2h_spark.operators.dedup import shingles_from_tokens
-
     from h2h_spark.operators.dedup import shingle_sets
 
-    # shingle_sets persists the (id, shingles) table: the persist is ALSO
-    # the evaluation barrier that keeps the shingle expression out of the
-    # explode generator — a generator child this complex evaluates
-    # interpreted (outside whole-stage codegen), measured ~4× slower than
-    # the codegen'd projection the barrier preserves.
+    # the persist of the (id, shingles) tables is the evaluation barrier
+    # that keeps the shingle expression out of the explode generator — a
+    # generator child this complex evaluates interpreted (outside
+    # whole-stage codegen), measured ~4× slower than the codegen'd
+    # projection the barrier preserves.  The returned lazy plan reads
+    # both caches, so they stay with the caller's session.
     ev = (
-        shingle_sets(eval_set, id_col, text_col, ngram, persist=True)
+        shingle_sets(eval_set, id_col, text_col, ngram).persist()
         .select(F.explode("sh").alias("shingle"))
         .distinct()
     )
-    tr = shingle_sets(train, id_col, text_col, ngram, persist=True).select(
+    tr = shingle_sets(train, id_col, text_col, ngram).persist().select(
         "id", F.explode("sh").alias("shingle")
     )
     hits = tr.join(F.broadcast(ev), "shingle")
@@ -571,45 +571,41 @@ def tfidf_keywords(
     aggregate — no driver action.  Ties rank by term ascending."""
     from pyspark.sql.window import Window
 
-    terms = (
-        df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__t"))
-        .select("id", F.explode("__t").alias("term"))
-        .groupBy("id", "term")
-        .agg(F.count("*").alias("tf"))
-        .persist()
-    )
-    # terms is already one row per (id, term) after the aggregate, so
-    # document frequency is a plain count — count_distinct would add a
-    # needless dedup Expand over the same rows.
-    docfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
-    ndocs = df.agg(F.count("*").alias("n"))
-    scored = (
-        terms.join(docfreq, "term")
-        .crossJoin(F.broadcast(ndocs))
-        .select(
-            "id",
-            "term",
-            F.round(
-                F.col("tf")
-                * (F.log((F.col("n") + 1) / (F.col("df") + 1)) + 1),
-                4,
-            ).alias("tfidf"),
+    with cache_scope() as keep:
+        terms = keep(
+            df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__t"))
+            .select("id", F.explode("__t").alias("term"))
+            .groupBy("id", "term")
+            .agg(F.count("*").alias("tf"))
         )
-    )
-    w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            F.col("id").alias(id_col), "term", "tfidf",
-            F.col("rank").cast("int").alias("rank"),
+        # terms is already one row per (id, term) after the aggregate, so
+        # document frequency is a plain count — count_distinct would add a
+        # needless dedup Expand over the same rows.
+        docfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
+        ndocs = df.agg(F.count("*").alias("n"))
+        scored = (
+            terms.join(docfreq, "term")
+            .crossJoin(F.broadcast(ndocs))
+            .select(
+                "id",
+                "term",
+                F.round(
+                    F.col("tf")
+                    * (F.log((F.col("n") + 1) / (F.col("df") + 1)) + 1),
+                    4,
+                ).alias("tfidf"),
+            )
         )
-        # materialize the per-doc top-k, then release the term cache
-        # instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    terms.unpersist()
-    return out
+        w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= top_k)
+            .select(
+                F.col("id").alias(id_col), "term", "tfidf",
+                F.col("rank").cast("int").alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def vocab_coverage(

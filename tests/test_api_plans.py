@@ -139,6 +139,10 @@ def test_sequence_pack_single_range_exchange(spark):
 
     for m in _re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
         assert m.group(1).strip(), "global (unpartitioned) window in plan"
+    # the production path returns the materialized checkpoint, detached
+    # from the cumsum cache it was computed through
+    prod = pack_sequences(docs, "doc_id", "n", budget=4096, n_parts=8)
+    assert "Scan ExistingRDD" in prod._jdf.queryExecution().executedPlan().toString()
 
 
 def test_partition_pruning_in_plan(spark):
